@@ -511,32 +511,6 @@ object DedupQueries {
     // two); state-sized static round plans via withLoopExec.
     val edges = edges0.cutLineage()
     val nEdges = edges.count()
-    // Round 15: state-gated RDD-lane unroll (see [[LoopKernels]]) —
-    // the same one-join min-label propagate (integer folds, bit-exact)
-    // with the same label-sum fixpoint test, per-round sums tagged
-    // through one probe job per segment, so the reported round count is
-    // identical to the serial loop's.
-    if (LoopKernels.enabled(s, nEdges)) {
-      import org.apache.spark.sql.types.LongType
-      val eRdd = LoopKernels.longPairs(edges) // (a_id, b_id)
-      val labels0 = eRdd.keys.distinct().map(x => (x, x))
-      val (labels, rounds, converged) =
-        LoopKernels.minLabelLoop(s, eRdd, labels0, maxRounds, nEdges)
-      if (!converged) {
-        System.err.println(
-          s"[graft] dedup_cluster_converged: round cap maxRounds=$maxRounds " +
-          "reached before convergence — labels are truncated, not the true " +
-          "transitive closure. Raise CcMaxRounds (and checkpoint lineage) for " +
-          "this graph.")
-      }
-      val labelsDf = LoopKernels.toDf(s,
-        labels.map(t => org.apache.spark.sql.Row(t._1, t._2)),
-        "id" -> LongType, "lbl" -> LongType)
-      labelsDf.persist()
-      PipelineCache.register(s"dedup:ccConverged:$d", labelsDf)
-      return (labelsDf.select(col("id").as("doc_id"), col("lbl").as("cluster"))
-        .orderBy("doc_id"), rounds, converged)
-    }
     GraphQueries.withLoopExec(s, stateRows = nEdges) {
     var labels = edges.select(col("a_id").as("id")).distinct()
       .select(col("id"), col("id").as("lbl"))

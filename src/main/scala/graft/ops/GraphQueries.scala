@@ -348,25 +348,6 @@ object GraphQueries {
     val adjC = adj.cutLineage()
     val nAdj = adjC.count()
     val n = verts.count()
-    val sess = adjC.sparkSession
-    // Round 15: state-gated RDD-lane unroll (see [[LoopKernels]]) —
-    // same warm start, same per-round algebra, per-round deltas and
-    // therefore the SAME n_rounds, probed one job per segment instead
-    // of two jobs (probe + broadcast rebuild) per round.
-    if (LoopKernels.enabled(sess, math.max(n, nAdj))) {
-      import org.apache.spark.sql.types.{DoubleType, LongType}
-      val adjRdd = adjC.rdd.map(r => (r.getAs[Long]("src"),
-        (r.getAs[Long]("dst"), r.getAs[Long]("deg"))))
-      val (ranks, rounds, delta) = LoopKernels.pagerankLoop(sess, adjRdd,
-        LoopKernels.longs(verts), n, relTol, maxRounds, math.max(n, nAdj))
-      if (delta >= relTol / n)
-        System.err.println(s"[graft] pagerank: round cap $maxRounds reached " +
-          s"before convergence (max delta $delta >= tol ${relTol / n})")
-      return LoopKernels.toDf(sess,
-          ranks.map(t => org.apache.spark.sql.Row(t._1, t._2)),
-          "x" -> LongType, "pr" -> DoubleType)
-        .select(col("x"), round(col("pr"), 9).as("pr"), lit(rounds).as("n_rounds"))
-    }
     val adjS = if (nAdj <= IterBroadcastMaxRows) broadcast(adjC) else adjC
     withLoopExec(s = adjC.sparkSession, stateRows = math.max(n, nAdj)) {
     val tol = relTol / n
@@ -548,27 +529,6 @@ object GraphQueries {
     // checkpointed blocks is one cheap job, paid once per query
     val nDir = dirS.count()
     val verts = supportVerts(s, d)
-    // Round 15: state-gated RDD-lane unroll (see [[LoopKernels]]) — the
-    // same min-depth fold (bit-exact integers), segments of rounds per
-    // boundary probe; rounds past exhaustion are no-ops on the depth map.
-    if (LoopKernels.enabled(s, nDir)) {
-      import org.apache.spark.sql.types.{IntegerType, LongType}
-      val seeds = LoopKernels.longs(verts).filter(_ % 20 == 0).map((_, 0))
-      val (depth, live) = LoopKernels.minDepthLoop(s, seeds,
-        LoopKernels.longPairs(dirS), BfsMaxDepth, nDir)
-      if (live) {
-        val newly = depth.filter(_._2 == BfsMaxDepth).count()
-        System.err.println(s"[graft] bfs: depth cap $BfsMaxDepth reached " +
-          s"with a non-empty frontier ($newly vertices) — deeper layers report -1")
-      }
-      val depthDf = LoopKernels.toDf(s,
-        depth.map(t => org.apache.spark.sql.Row(t._1, t._2)),
-        "x" -> LongType, "depth" -> IntegerType)
-      return verts.join(depthDf, Seq("x"), "left_outer")
-        .select(coalesce(col("depth"), lit(-1)).as("depth"))
-        .groupBy("depth").agg(count(lit(1)).as("n_vertices"))
-        .orderBy("depth")
-    }
     val dir = if (nDir <= IterBroadcastMaxRows) broadcast(dirS) else dirS
     withLoopExec(s, stateRows = nDir) {
     var depth = verts.filter(col("x") % 20 === 0)
@@ -619,40 +579,29 @@ object GraphQueries {
     * survivor set only shrinks, so rounds get cheaper. The oracle peels
     * the same layers by fixed unroll (MATERIALIZED, the BFS lesson) and
     * derives n_rounds as the first round whose survivor count repeats. */
-  def graphKcore(s: SparkSession, d: String): DataFrame = {
+  def graphKcore(s: SparkSession, d: String): DataFrame =
+    kcoreOnAdjacency(supportDir(s, d), supportVerts(s, d), KCoreMaxRounds)
+      .select(col("x").as("l_partkey"), col("core_deg"), col("n_rounds"))
+      .orderBy("l_partkey")
+
+  /** Core peeling loop over an explicit symmetric adjacency — factored
+    * so the spec can drive it with a synthetic graph whose peel cascades
+    * over several rounds (the fixture's support graph is already a
+    * [[KCoreK]]-core, so it converges in round 1). */
+  private[graft] def kcoreOnAdjacency(dir: DataFrame, verts: DataFrame,
+      maxRounds: Int): DataFrame = {
     // base snapshot — see sccLabels
-    val dir = supportDir(s, d).cutLineage()
-    var active = supportVerts(s, d).cutLineage(eager = false)
+    val dirS = dir.cutLineage()
+    var active = verts.cutLineage(eager = false)
     var nActive = active.count()
-    // Round 15: state-gated RDD-lane unroll (see [[LoopKernels]]) —
-    // same peel algebra (integer degree counts, survivor-count fixpoint
-    // test), per-round counts tagged through one probe job per segment,
-    // so n_rounds is identical to the serial loop's.
-    if (LoopKernels.enabled(s, nActive)) {
-      import org.apache.spark.sql.types.LongType
-      val (core, rounds, converged, nLeft) = LoopKernels.kcoreLoop(s,
-        LoopKernels.longPairs(dir), LoopKernels.longs(active),
-        KCoreK, KCoreMaxRounds, nActive, nActive)
-      if (!converged)
-        System.err.println(s"[graft] kcore: round cap $KCoreMaxRounds reached " +
-          s"before fixpoint ($nLeft vertices still active)")
-      val coreDf = LoopKernels.toDf(s,
-        core.map(x => org.apache.spark.sql.Row(x)), "x" -> LongType)
-      return dir
-        .join(coreDf.select(col("x").as("src")), "src")
-        .join(coreDf.select(col("x").as("dst")), "dst")
-        .groupBy(col("src").as("l_partkey")).agg(count(lit(1)).as("core_deg"))
-        .select(col("l_partkey"), col("core_deg"), lit(rounds).as("n_rounds"))
-        .orderBy("l_partkey")
-    }
-    withLoopExec(s, stateRows = nActive) {
+    withLoopExec(dirS.sparkSession, stateRows = nActive) {
     var rounds = 0
     var converged = false
-    while (!converged && rounds < KCoreMaxRounds) {
+    while (!converged && rounds < maxRounds) {
       rounds += 1
       // lazy: the survivor count is the materializing action — one
       // driver barrier per peel round instead of two
-      val keep = dir
+      val keep = dirS
         .join(active.select(col("x").as("src")), "src")
         .join(active.select(col("x").as("dst")), "dst")
         .groupBy("src").agg(count(lit(1)).as("deg"))
@@ -665,14 +614,13 @@ object GraphQueries {
       active = keep
     }
     if (!converged)
-      System.err.println(s"[graft] kcore: round cap $KCoreMaxRounds reached " +
+      System.err.println(s"[graft] kcore: round cap $maxRounds reached " +
         s"before fixpoint ($nActive vertices still active)")
-    dir
+    dirS
       .join(active.select(col("x").as("src")), "src")
       .join(active.select(col("x").as("dst")), "dst")
-      .groupBy(col("src").as("l_partkey")).agg(count(lit(1)).as("core_deg"))
-      .select(col("l_partkey"), col("core_deg"), lit(rounds).as("n_rounds"))
-      .orderBy("l_partkey")
+      .groupBy(col("src").as("x")).agg(count(lit(1)).as("core_deg"))
+      .select(col("x"), col("core_deg"), lit(rounds).as("n_rounds"))
     }
   }
 
@@ -852,23 +800,6 @@ object GraphQueries {
     val dirS = dir.cutLineage()
     val nDir = dirS.count()
     val sess = dirS.sparkSession
-    // Round 15: state-gated RDD-lane unroll (see [[LoopKernels]]) —
-    // same self-vote (−count, label) argmin (integer votes, bit-exact),
-    // per-round changed-label counts tagged through one probe job per
-    // segment, so n_rounds is identical to the serial loop's.
-    if (LoopKernels.enabled(sess, nDir)) {
-      import org.apache.spark.sql.types.LongType
-      val labels0 = LoopKernels.longs(verts).map(x => (x, x))
-      val (labels, rounds, converged, lastChanged) = LoopKernels.lpaLoop(sess,
-        LoopKernels.longPairs(dirS), labels0, maxRounds, nDir)
-      if (!converged)
-        System.err.println(s"[graft] lpa: round cap $maxRounds reached " +
-          s"before fixpoint ($lastChanged labels still changing)")
-      return LoopKernels.toDf(sess,
-          labels.map(t => org.apache.spark.sql.Row(t._1, t._2)),
-          "x" -> LongType, "lbl" -> LongType)
-        .select(col("x"), col("lbl"), lit(rounds).as("n_rounds"))
-    }
     withLoopExec(sess, stateRows = nDir) {
     def step(lbl: DataFrame): DataFrame =
       dirS.join(lbl.select(col("x").as("dst"), col("lbl")), "dst")
@@ -982,33 +913,6 @@ object GraphQueries {
     // inside fwbwDepth — see IterBroadcastMaxRows
     val edges = seqEdges(s, d).cutLineage()
     val nEdges = edges.count()
-    // Round 15: state-gated RDD-lane unroll (see [[LoopKernels]]) —
-    // the same tagged FW+BW min-round closure (integer folds,
-    // bit-exact), same max-out-degree/min-id pivot, same both-dirs
-    // intersection; boundary probes replace per-round count jobs.
-    if (LoopKernels.enabled(s, 2 * nEdges)) {
-      import org.apache.spark.sql.types.LongType
-      val eRdd = LoopKernels.longPairs(edges)
-      val pivots = eRdd.mapValues(_ => 1L)
-        .reduceByKey((a: Long, b: Long) => a + b)
-        .map { case (src, odeg) => (odeg, src) }
-        .top(1)(LoopKernels.PivotOrdering)
-        .map { case (_, src) => (src, src) }
-        .toSeq
-      val (depth, live) = LoopKernels.fwbwLoop(s, eRdd, pivots,
-        SccMaxRounds, 2 * nEdges)
-      if (live)
-        System.err.println(s"[graft] scc: round cap $SccMaxRounds " +
-          "reached — closure may be incomplete")
-      val members = depth
-        .map { case ((x, pid, dir), _) => ((x, pid), 1 << dir) }
-        .reduceByKey((a: Int, b: Int) => a | b)
-        .filter(_._2 == 3)
-        .keys.map(_._1)
-      return LoopKernels.toDf(s,
-          members.map(x => org.apache.spark.sql.Row(x)), "member" -> LongType)
-        .orderBy("member")
-    }
     withLoopExec(s, stateRows = nEdges) {
     val pivot = edges.groupBy("src").agg(count(lit(1)).as("odeg"))
       .orderBy(col("odeg").desc, col("src")).limit(1)
@@ -1154,25 +1058,6 @@ object GraphQueries {
     val edges = supportEdges(s, d).cutLineage()
     val verts = supportVerts(s, d)
     val nE = edges.count()
-    // Round 15: state-gated RDD-lane unroll (see [[LoopKernels]]) —
-    // same Bellman max-relaxation (integer folds, bit-exact) with the
-    // serial loop's own Σ-layer stationarity test probed once per
-    // segment (monotone + idempotent at the fixpoint, so over-run
-    // rounds inside a segment are no-ops).
-    if (LoopKernels.enabled(s, nE)) {
-      import org.apache.spark.sql.types.LongType
-      val (layers, converged) = LoopKernels.topoLoop(s,
-        LoopKernels.longPairs(edges), LoopKernels.longs(verts),
-        TopoMaxRounds, nE)
-      if (!converged)
-        System.err.println(s"[graft] topo_layers: round cap $TopoMaxRounds " +
-          "reached — layering may be incomplete")
-      return LoopKernels.toDf(s,
-          layers.map(t => org.apache.spark.sql.Row(t._1, t._2)),
-          "x" -> LongType, "l" -> LongType)
-        .select(col("x").as("l_partkey"), col("l").as("layer"))
-        .orderBy("l_partkey")
-    }
     withLoopExec(s, stateRows = nE) {
     var layers = verts.withColumn("l", lit(0L)).cutLineage(eager = false)
     var prevSum = -1L
@@ -1309,22 +1194,6 @@ object GraphQueries {
     // plan — the driver-side analogue of checkpointing iteration state.
     val edges = brandSeqEdges(s, d).cutLineage()
     val nE2 = 2 * edges.count()
-    // Round 15: state-gated RDD-lane unroll (see [[LoopKernels]]) — the
-    // full trim + multi-pivot FW-BW decomposition with the identical
-    // operator sequence (integer folds, bit-exact), trim rounds and
-    // closure rounds unrolled into one probe job per segment, and the
-    // per-round singleton trim labels collapsed to the segment's
-    // residual diff (the union of per-round diffs IS the segment diff).
-    if (LoopKernels.enabled(s, nE2)) {
-      import org.apache.spark.sql.types.LongType
-      val labeledRdd = LoopKernels.sccDecompose(s,
-        LoopKernels.longPairs(edges), SccMaxComponents, SccTrimMaxRounds,
-        SccPivotsPerRound, SccMaxRounds, nE2, m => System.err.println(m))
-      LoopKernels.toDf(s,
-          labeledRdd.map(t => org.apache.spark.sql.Row(t._1, t._2)),
-          "member" -> LongType, "scc_id" -> LongType)
-        .cutLineage()
-    } else {
     withLoopExec(s, stateRows = nE2) {
     val verts = edges.select(col("src").as("x"))
       .unionAll(edges.select(col("dst").as("x"))).distinct()
@@ -1459,7 +1328,6 @@ object GraphQueries {
       // condensation, their window/join plans) otherwise re-analyze the
       // whole loop history every time they build on the labeling
       .cutLineage()
-    }
     }
   }
 

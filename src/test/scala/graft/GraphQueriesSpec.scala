@@ -343,6 +343,20 @@ class GraphQueriesSpec extends SparkTestBase {
       s"triangles must keep distinct communities: $r2")
   }
 
+  /** Fixture support edges (u < v, co-purchased in at least
+    * [[ops.GraphQueries.MinSupport]] orders) rebuilt on the driver from
+    * raw lineitem rows. */
+  private def driverSupportEdges(): Seq[(Long, Long)] = {
+    val li = ops.Tables.lineitem(spark, sfDir)
+      .select("l_orderkey", "l_partkey").collect()
+      .map(r => (r.getLong(0), r.getLong(1)))
+    val pairCount = li.groupBy(_._1).values.toSeq.flatMap { grp =>
+      val ps = grp.map(_._2).sorted.toSeq
+      for (a <- ps; b <- ps if a < b) yield (a, b)
+    }.groupBy(identity).view.mapValues(_.size)
+    pairCount.filter(_._2 >= ops.GraphQueries.MinSupport).keys.toSeq
+  }
+
   /** Fixture support adjacency rebuilt independently for the no-op check. */
   private def graftTestAdjacency() = {
     val li = ops.Tables.lineitem(spark, sfDir)
@@ -389,14 +403,7 @@ class GraphQueriesSpec extends SparkTestBase {
     ops.PipelineCache.releaseAll()
     // reference: rebuild the id-oriented support DAG and Bellman-relax
     // over a topological order
-    val li = ops.Tables.lineitem(spark, sfDir)
-      .select("l_orderkey", "l_partkey").collect()
-      .map(r => (r.getLong(0), r.getLong(1)))
-    val pairCount = li.groupBy(_._1).values.toSeq.flatMap { grp =>
-      val ps = grp.map(_._2).sorted.toSeq
-      for (a <- ps; b <- ps if a < b) yield (a, b)
-    }.groupBy(identity).view.mapValues(_.size)
-    val edges = pairCount.filter(_._2 >= ops.GraphQueries.MinSupport).keys.toSeq
+    val edges = driverSupportEdges()
     val verts = edges.flatMap(e => Seq(e._1, e._2)).toSet
     var layer = verts.map(_ -> 0L).toMap
     var changed = true
@@ -530,6 +537,79 @@ class GraphQueriesSpec extends SparkTestBase {
     assert(byScc.count(_._2.length >= 2) >= 2, s"sizes=${byScc.view.mapValues(_.length).toMap}")
     assert(byScc.count(_._2.length == 1) >= 1)
   }
+  test("k-core equals a driver-side peel of the collected support graph") {
+    val rows = SparkEntry.queries("graph_kcore")(spark, sfDir)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
+    ops.PipelineCache.releaseAll()
+    // reference: the support graph rebuilt from raw lineitem rows, then
+    // peeled round by round until the survivor count repeats
+    val edges = driverSupportEdges()
+    val nbrs = (edges ++ edges.map(_.swap)).groupBy(_._1)
+      .view.mapValues(_.map(_._2).toSet).toMap
+    def degIn(core: Set[Long], v: Long): Int = nbrs(v).count(core)
+    var core = nbrs.keySet
+    var rounds = 0
+    var converged = false
+    while (!converged && rounds < ops.GraphQueries.KCoreMaxRounds) {
+      rounds += 1
+      val keep = core.filter(v => degIn(core, v) >= ops.GraphQueries.KCoreK)
+      converged = keep.size == core.size
+      core = keep
+    }
+    assert(converged, s"reference peel hit the round cap at $rounds")
+    assert(core.nonEmpty)
+    assert(rows.map(_._1).toSet == core)
+    assert(rows.length == core.size, "one row per core vertex")
+    rows.foreach { case (v, deg, n) =>
+      assert(deg == degIn(core, v).toLong, s"vertex $v: core_deg $deg")
+      assert(deg >= ops.GraphQueries.KCoreK)
+      assert(n == rounds, s"vertex $v: n_rounds $n != $rounds")
+    }
+  }
+
+  test("k-core peel cascades over rounds and warns at the cap") {
+    import spark.implicits._
+    // K4 on 1..4, plus 5 joined to 4, 6 and 7; 6 and 7 are leaves. With
+    // k = 3, round 1 drops the leaves, which leaves 5 with degree 1, so
+    // round 2 drops 5 and round 3 confirms the fixpoint.
+    val e = Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L), (3L, 4L),
+      (4L, 5L), (5L, 6L), (5L, 7L))
+    val dir = e.toDF("src", "dst").unionAll(e.map(_.swap).toDF("src", "dst"))
+    val verts = dir.select(col("src").as("x")).distinct()
+    val out = ops.GraphQueries.kcoreOnAdjacency(dir, verts, 16)
+      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getInt(2))).toMap
+    assert(out == (1L to 4L).map(_ -> ((3L, 3))).toMap, s"got $out")
+    val errBuf = new java.io.ByteArrayOutputStream()
+    val realErr = System.err
+    val capped = try {
+      System.setErr(new java.io.PrintStream(errBuf, true, "UTF-8"))
+      ops.GraphQueries.kcoreOnAdjacency(dir, verts, 1).collect()
+    } finally System.setErr(realErr)
+    // one round only drops the leaves: 5 survives with its K4 neighbor
+    assert(capped.map(_.getLong(0)).toSet == (1L to 5L).toSet)
+    assert(errBuf.toString("UTF-8").contains("kcore: round cap 1 reached"))
+  }
+
+  test("condensation DAG partitions the SCC labelling and has a source and a sink") {
+    val scc = SparkEntry.queries("graph_scc_full")(spark, sfDir)
+      .collect().map(r => (r.getLong(0), r.getLong(1)))
+    val rows = SparkEntry.queries("graph_condensation_dag")(spark, sfDir)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+    ops.PipelineCache.releaseAll()
+    // (scc_id, scc_size, cond_out_deg, cond_in_deg)
+    assert(rows.nonEmpty)
+    assert(rows.map(_._2).sum == scc.length.toLong,
+      "component sizes cover every labelled vertex exactly once")
+    assert(rows.map(_._1).toSet == scc.map(_._2).toSet)
+    assert(rows.map(_._3).sum == rows.map(_._4).sum,
+      "every condensed edge has one tail and one head")
+    // the fixture has condensed edges, and a DAG with at least one edge
+    // has a source and a sink component
+    assert(rows.exists(_._3 > 0), "no condensed edge at this fixture")
+    assert(rows.exists(_._4 == 0), "no component without in-edges")
+    assert(rows.exists(_._3 == 0), "no component without out-edges")
+  }
+
   test("2-hop HLL sketch tracks the exact cardinality within its bound") {
     // the sketch's target set includes the vertex itself (symmetric
     // graph: x is a neighbor of its neighbors), so exact + 1
